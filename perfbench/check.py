@@ -3,8 +3,9 @@
 Registry queries are compared with their ``oracle_sql()`` in DuckDB
 using the repo's canonical compare (``tools/check_parity.py``). The ETL
 destination tables are checked for their grain and against a pandas
-re-execution of the reference transform chain; the view read is checked
-that all twelve views are registered.
+re-execution of the reference transform chain; each of the twelve
+reporting views is compared with a DuckDB re-statement of its SQL over
+the published tables.
 """
 
 from __future__ import annotations
@@ -164,9 +165,117 @@ def check_publish(oracle: Oracle, spark, warehouse: str, seed: int,
     return problems
 
 
-def check_views(spark, names: list[str]) -> list[str]:
-    """All twelve reporting views are registered. Their inputs are the
-    checked destination tables, and the operation read each of them to
-    completion; counting them again would cost another view pass."""
-    problems = [] if len(names) == 12 else [f"{len(names)} views registered, not 12"]
-    return problems + [f"view {n} missing" for n in names if not spark.catalog.tableExists(n)]
+NCL, LONDON, ENGLAND = "E56000027", "E40000003", "E92000001"
+JOIN_KEY = ("CANCER_SITE || GENDER || CAST(YEARS_SINCE_DIAGNOSIS AS VARCHAR)"
+            " || DATE_DIAGNOSIS_WINDOW")
+SORT_GENDER = "CASE WHEN GENDER = 'Persons' THEN 1 ELSE 2 END"
+CA = "AREA_TYPE = 'Cancer Alliance'"
+AGE_STD_NET = ("STANDARDISATION_TYPE = 'Age-standardised'"
+               " AND SURVIVAL_METRIC = 'Net Survival'")
+ADULT4_PUBLISHED = (
+    "AREA_TYPE AS Area_Type, AREA_CODE AS Area_Code, AREA_NAME AS Area_Name, "
+    "IS_AREA_CORE AS Area_Core, CANCER_SITE AS Cancer_Site, GENDER AS Gender, "
+    "STANDARDISATION_TYPE AS Standardisation_Type, "
+    "STANDARDISATION_TYPE_SUBCATEGORY AS Standardisation_Subcategory, "
+    "YEARS_SINCE_DIAGNOSIS AS Years_Since_Diagnosis, "
+    "PATIENT_NUMBERS AS Patient_Numbers, SURVIVAL_METRIC AS Survival_Metric, "
+    "SURVIVAL_PERCENT AS Survival_Per, DATE_DIAGNOSIS_WINDOW AS Date_Diagnosis_Window, "
+    "DATE_SNAPSHOT AS Date_Snapshot, JOIN_KEY, SORT_GENDER AS Sort_Gender"
+)
+BEST_CA = """
+    SELECT 'X' AS AREA_CODE, 'Best Non-NCL Cancer Alliance' AS AREA_NAME,
+           IS_AREA_CORE, CANCER_SITE, GENDER, AGE_AT_DIAGNOSIS,
+           STANDARDISATION_TYPE, YEAR_OF_DIAGNOSIS, YEARS_SINCE_DIAGNOSIS,
+           CAST(NULL AS BIGINT) AS PATIENT_NUMBERS,
+           max(SURVIVAL_PERCENT) AS SURVIVAL_PERCENT,
+           CAST(NULL AS DOUBLE) AS LOWER_CI, CAST(NULL AS DOUBLE) AS UPPER_CI,
+           CAST(NULL AS DOUBLE) AS PRECISION, CAST(NULL AS DOUBLE) AS STANDARD_ERROR,
+           CAST(NULL AS BOOLEAN) AS IS_DATA_SUBTITUTED
+    FROM idx WHERE NOT IS_AREA_CORE GROUP BY ALL"""
+ADULT4 = f"""
+    SELECT * EXCLUDE (_TIMESTAMP), {JOIN_KEY} AS JOIN_KEY, {SORT_GENDER} AS SORT_GENDER
+    FROM adult WHERE IS_AREA_CORE AND (({AGE_STD_NET}) OR AREA_CODE = '{NCL}')"""
+CA_COMPARISON = f"""
+    SELECT * EXCLUDE (_TIMESTAMP), {JOIN_KEY} AS JOIN_KEY, {SORT_GENDER} AS SORT_GENDER
+    FROM adult WHERE {CA} AND {AGE_STD_NET}"""
+RANK = f"""
+    WITH ca AS (
+        SELECT AREA_CODE, CANCER_SITE, {JOIN_KEY} AS JOIN_KEY, SURVIVAL_PERCENT
+        FROM adult WHERE {AGE_STD_NET} AND {CA}
+          AND SURVIVAL_PERCENT IS NOT NULL
+    ), ranked AS (
+        SELECT JOIN_KEY, AREA_CODE, SURVIVAL_PERCENT,
+               RANK() OVER (PARTITION BY JOIN_KEY ORDER BY SURVIVAL_PERCENT DESC) AS rank_val
+        FROM ca
+    ), base AS (SELECT JOIN_KEY, count(*) AS RANK_BASE FROM ca GROUP BY JOIN_KEY
+    ), focus AS (SELECT * FROM ranked WHERE AREA_CODE = '{NCL}')
+    SELECT base.JOIN_KEY, sites.CANCER_SITE, focus.SURVIVAL_PERCENT,
+           focus.rank_val AS RANK_CA, RANK_BASE,
+           CASE WHEN focus.rank_val IS NULL THEN NULL
+                WHEN RANK_BASE < 4 THEN '-'
+                WHEN CAST(focus.rank_val AS DOUBLE) / RANK_BASE < 0.25 THEN '1st'
+                WHEN CAST(focus.rank_val AS DOUBLE) / RANK_BASE < 0.5 THEN '2nd'
+                WHEN CAST(focus.rank_val AS DOUBLE) / RANK_BASE < 0.75 THEN '3rd'
+                ELSE '4th' END AS NCL_QUARTILE
+    FROM base LEFT JOIN focus ON base.JOIN_KEY = focus.JOIN_KEY
+    JOIN (SELECT DISTINCT JOIN_KEY, CANCER_SITE FROM ca) sites
+      ON base.JOIN_KEY = sites.JOIN_KEY"""
+STANDARDS = f"""
+    SELECT {JOIN_KEY} AS JOIN_KEY,
+           sum(SURVIVAL_PERCENT) FILTER (WHERE AREA_CODE = '{ENGLAND}'
+                                         AND AREA_NAME = 'England') AS ENGLAND,
+           sum(SURVIVAL_PERCENT) FILTER (WHERE AREA_CODE = '{LONDON}'
+                                         AND AREA_NAME = 'London') AS LONDON,
+           max(SURVIVAL_PERCENT) FILTER (WHERE {CA}) AS BEST,
+           min(SURVIVAL_PERCENT) FILTER (WHERE {CA}) AS WORST,
+           quantile_disc(SURVIVAL_PERCENT, 0.25) FILTER (WHERE {CA}) AS Q1,
+           quantile_disc(SURVIVAL_PERCENT, 0.5) FILTER (WHERE {CA}) AS Q2,
+           quantile_disc(SURVIVAL_PERCENT, 0.75) FILTER (WHERE {CA}) AS Q3
+    FROM adult
+    WHERE {AGE_STD_NET} AND (AREA_CODE IN ('{ENGLAND}', '{LONDON}') OR {CA})
+    GROUP BY ALL"""
+
+# The twelve reporting views re-stated in DuckDB SQL over the published
+# tables ``idx`` (INDEX) and ``adult`` (ADULT_4), after the reference's
+# docs/reporting_*.sql view definitions.
+VIEW_SQL = {
+    "modelling_index": "SELECT * EXCLUDE (_TIMESTAMP) FROM idx",
+    "modelling_adult4": "SELECT * EXCLUDE (_TIMESTAMP) FROM adult",
+    "reporting_index_best_ca": BEST_CA,
+    "reporting_index": f"""
+        SELECT *, CASE WHEN CANCER_SITE = 'Overall' THEN 1 ELSE 2 END AS SORT_SITE,
+               {SORT_GENDER} AS SORT_GENDER,
+               CASE WHEN AGE_AT_DIAGNOSIS = 'All ages' THEN 1 ELSE 2 END AS SORT_AGE
+        FROM (SELECT * EXCLUDE (_TIMESTAMP) FROM idx WHERE IS_AREA_CORE
+              UNION ALL BY NAME {BEST_CA})""",
+    "reporting_adult4": ADULT4,
+    "published_adult4": f"SELECT {ADULT4_PUBLISHED} FROM ({ADULT4})",
+    "reporting_ca_comparison": CA_COMPARISON,
+    "published_ca_comparison": f"SELECT {ADULT4_PUBLISHED} FROM ({CA_COMPARISON})",
+    "reporting_rank": RANK,
+    "published_rank": f"""
+        SELECT JOIN_KEY, CANCER_SITE AS Cancer_Site, SURVIVAL_PERCENT AS Survival_Per,
+               RANK_CA AS Rank_CA, RANK_BASE AS Rank_Denominator, NCL_QUARTILE AS Quartile
+        FROM ({RANK})""",
+    "reporting_benchmarking_standard": STANDARDS,
+    "published_benchmarking_standard": f"""
+        SELECT JOIN_KEY, ENGLAND AS England, LONDON AS London, BEST AS Best,
+               WORST AS Worst, Q1, Q2, Q3 FROM ({STANDARDS})""",
+}
+
+
+def check_views(oracle: Oracle, spark, warehouse: str, names: list[str]) -> list[str]:
+    """Each registered view's rows equal its DuckDB re-statement
+    (``VIEW_SQL``) over the published tables, with the canonical compare;
+    the load timestamp column is left out of the compare."""
+    problems = [] if sorted(names) == sorted(VIEW_SQL) else [
+        f"views registered {sorted(names)}, expected {sorted(VIEW_SQL)}"]
+    for table, alias in (("INDEX", "idx"), ("ADULT_4", "adult")):
+        path = os.path.join(warehouse, table, "*.parquet")
+        oracle.con.sql(f"CREATE OR REPLACE VIEW {alias} AS SELECT * FROM '{path}'")
+    for n in sorted(set(names) & set(VIEW_SQL)):
+        got = spark.table(n).toPandas()
+        got = got.drop(columns=[c for c in got.columns if c == "_TIMESTAMP"])
+        want = _nulls_as_none(oracle.con.sql(VIEW_SQL[n]).df())
+        problems += [f"{n}: {p}" for p in oracle.compare(n, _nulls_as_none(got), want)]
+    return problems

@@ -1,10 +1,16 @@
 """Seeded input generator.
 
-Every table the engine reads is synthesised from the workload seed, with
-the schema, column types and value domains of the engine's star-schema
-test tables (TESTDATA.md) and the workbook shapes of FIXTURES.md. The
-same seed gives byte-identical inputs; nothing outside the output
-directory is read.
+The parquet tables are a seeded resample of the engine's sf0.1 test
+tables (TESTDATA.md), of which ``source/`` holds a copy (same rows,
+schema and column types; recompressed with zstd to keep the checkout
+small). Each table keeps a seeded ``KEEP`` share of its entities --
+users for ``events``, orders for ``orders`` and ``lineitem``, documents,
+vectors -- and every id column is re-keyed through a seeded permutation
+of its id domain, so the same order key maps to the same new key in
+both tables that carry it. The Index and Adult publication workbooks,
+which have no test-table source, are written from the FIXTURES.md
+shapes. The same seed gives byte-identical inputs; nothing outside the
+benchmark's directory and the output directories is read or written.
 """
 
 from __future__ import annotations
@@ -14,176 +20,66 @@ import zipfile
 from xml.sax.saxutils import escape
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-# Row counts at scale factor 1; the benchmark generates sf0.1.
-ROWS_AT_SF1 = {
-    "customer": 150_000,
-    "supplier": 10_000,
-    "part": 200_000,
-    "orders": 1_500_000,
-    "lineitem": 6_000_000,
-    "events": 1_000_000,
-    "documents": 50_000,
-    "embeddings": 20_000,
+SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "source")
+KEEP = 0.9
+
+# Id columns re-keyed per table, with their id kind; the first one names
+# the entity whose rows are kept or dropped together.
+IDS = {
+    "events": [("user_id", "user"), ("event_id", "event")],
+    "orders": [("o_orderkey", "order")],
+    "lineitem": [("l_orderkey", "order")],
+    "documents": [("doc_id", "doc")],
+    "embeddings": [("vec_id", "vec")],
 }
-USERS_AT_SF1 = 15_000
-
-WORDS = (
-    "a agg batch big column customer data fast filter group hash join key "
-    "line merge order part query row scan slow small sort spark stream "
-    "table the value vector window"
-).split()
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-LANGS = ["en", "de", "es", "fr", "zh"]
-LANG_P = [0.4, 0.15, 0.15, 0.15, 0.15]
-PART_ADJ = ["blue", "cold", "hot", "large", "new", "old", "red", "small"]
-PART_NOUN = ["anvil", "bolt", "gear", "gizmo", "plate", "ring", "rod", "widget"]
-PART_TYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
+KINDS = ["user", "event", "order", "doc", "vec"]
 
 
-def _pick(rng, values, n, p=None):
-    return np.asarray(values, dtype=object)[rng.choice(len(values), n, p=p)]
+def _source(name: str) -> str:
+    return os.path.join(SOURCE, f"{name}.parquet")
 
 
-def _money(rng, lo, hi, n):
-    return np.round(rng.uniform(lo, hi, n), 2)
+def rekey(seed: int, kind: str) -> tuple[np.ndarray, np.ndarray]:
+    """(keep mask, new id) over an id kind's domain, 0 .. its largest id
+    in any source table."""
+    size = 1 + max(
+        pc.max(pq.read_table(_source(t), columns=[c]).column(0)).as_py()
+        for t, cols in IDS.items() for c, k in cols if k == kind
+    )
+    rng = np.random.default_rng([seed, KINDS.index(kind)])
+    return rng.random(size) < KEEP, rng.permutation(size)
 
 
-def _days(rng, start, n_days, n):
-    base = np.datetime64(start, "us")
-    return base + rng.integers(0, n_days, n) * np.timedelta64(86_400_000_000, "us")
+def resample(seed: int, name: str) -> pa.Table:
+    """One table's seeded resample; tables without ids are copied."""
+    table = pq.read_table(_source(name))
+    for i, (col, kind) in enumerate(IDS.get(name, [])):
+        keep, new = rekey(seed, kind)
+        old = table.column(col).to_numpy()
+        if i == 0:
+            table = table.filter(pa.array(keep[old]))
+            old = old[keep[old]]
+        table = table.set_column(
+            table.schema.get_field_index(col), table.schema.field(col),
+            pa.array(new[old], type=table.schema.field(col).type),
+        )
+    return table
 
 
-def star_tables(seed: int, sf: float) -> dict[str, pd.DataFrame]:
-    """The ten engine tables at scale factor ``sf``."""
-    rng = np.random.default_rng(seed)
-    n = {k: max(1, int(round(v * sf))) for k, v in ROWS_AT_SF1.items()}
-    users = max(2, int(round(USERS_AT_SF1 * sf)))
-    t: dict[str, pd.DataFrame] = {}
-
-    t["region"] = pd.DataFrame({
-        "r_regionkey": np.arange(5, dtype=np.int32),
-        "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"],
-    })
-    t["nation"] = pd.DataFrame({
-        "n_nationkey": np.arange(25, dtype=np.int32),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": (np.arange(25) % 5).astype(np.int32),
-    })
-    k = np.arange(n["customer"], dtype=np.int64)
-    t["customer"] = pd.DataFrame({
-        "c_custkey": k,
-        "c_name": [f"Customer#{i:09d}" for i in k],
-        "c_nationkey": rng.integers(0, 25, len(k)).astype(np.int32),
-        "c_acctbal": _money(rng, -999.99, 9999.99, len(k)),
-        "c_mktsegment": _pick(rng, SEGMENTS, len(k)),
-    })
-    k = np.arange(n["supplier"], dtype=np.int64)
-    t["supplier"] = pd.DataFrame({
-        "s_suppkey": k,
-        "s_name": [f"Supplier#{i:09d}" for i in k],
-        "s_nationkey": rng.integers(0, 25, len(k)).astype(np.int32),
-        "s_acctbal": _money(rng, -999.99, 9999.99, len(k)),
-    })
-    k = np.arange(n["part"], dtype=np.int64)
-    t["part"] = pd.DataFrame({
-        "p_partkey": k,
-        "p_name": _pick(rng, PART_ADJ, len(k)) + " " + _pick(rng, PART_NOUN, len(k)),
-        "p_brand": np.char.add("Brand#", rng.integers(1, 26, len(k)).astype(str)).astype(object),
-        "p_type": _pick(rng, PART_TYPES, len(k)),
-        "p_size": rng.integers(1, 51, len(k)).astype(np.int32),
-        "p_retailprice": np.round(900.0 + (k % 1000) / 10.0, 2),
-    })
-    k = np.arange(n["orders"], dtype=np.int64)
-    t["orders"] = pd.DataFrame({
-        "o_orderkey": k,
-        "o_custkey": rng.integers(0, n["customer"], len(k)),
-        "o_orderstatus": _pick(rng, ["F", "O", "P"], len(k)),
-        "o_totalprice": _money(rng, 1000.0, 500000.0, len(k)),
-        "o_orderdate": _days(rng, "1995-01-01", 2404, len(k)),
-        "o_orderpriority": _pick(rng, PRIORITIES, len(k)),
-    })
-    m = n["lineitem"]
-    t["lineitem"] = pd.DataFrame({
-        "l_orderkey": rng.integers(0, n["orders"], m),
-        "l_partkey": rng.integers(0, n["part"], m),
-        "l_suppkey": rng.integers(0, n["supplier"], m),
-        "l_linenumber": rng.integers(1, 8, m).astype(np.int32),
-        "l_quantity": rng.integers(1, 51, m).astype(np.float64),
-        "l_extendedprice": _money(rng, 900.0, 105000.0, m),
-        "l_discount": rng.integers(0, 11, m) / 100.0,
-        "l_tax": rng.integers(0, 9, m) / 100.0,
-        "l_returnflag": _pick(rng, ["A", "N", "R"], m),
-        "l_linestatus": _pick(rng, ["F", "O"], m),
-        "l_shipdate": _days(rng, "1995-01-02", 2498, m),
-    })
-    m = n["events"]
-    t["events"] = pd.DataFrame({
-        "event_id": np.arange(m, dtype=np.int64),
-        "ts": np.datetime64("2024-01-01", "us")
-        + rng.integers(0, 30 * 86_400_000_000, m).astype("timedelta64[us]"),
-        "user_id": rng.integers(0, users, m),
-        "event_type": _pick(rng, EVENT_TYPES, m),
-        "value": np.round(rng.exponential(50.0, m), 2),
-        "props": [f'{{"k": {v}}}' for v in rng.integers(0, 100, m)],
-    })
-    t["documents"] = _documents(rng, n["documents"])
-    t["embeddings"] = _embeddings(rng, n["embeddings"])
-    return t
-
-
-def _documents(rng, n: int) -> pd.DataFrame:
-    lengths = rng.integers(10, 101, n)
-    words = np.asarray(WORDS, dtype=object)
-    texts = [" ".join(words[rng.integers(0, len(words), L)]) for L in lengths]
-    # ~5% near-duplicates (one word swapped) so the dedup operators
-    # find real pairs, plus a few exact copies
-    for i in rng.choice(n, n // 20, replace=False):
-        toks = texts[rng.integers(0, n)].split(" ")
-        toks[rng.integers(0, len(toks))] = str(words[rng.integers(0, len(words))])
-        texts[i] = " ".join(toks)
-    for i in rng.choice(n, max(1, n // 600), replace=False):
-        texts[i] = texts[rng.integers(0, n)]
-    return pd.DataFrame({
-        "doc_id": np.arange(n, dtype=np.int64),
-        "text": texts,
-        "lang": _pick(rng, LANGS, n, p=LANG_P),
-        "source": np.char.add("src", rng.integers(0, 20, n).astype(str)).astype(object),
-        "n_chars": np.array([len(s) for s in texts], dtype=np.int64),
-    })
-
-
-def _embeddings(rng, n: int, dim: int = 64, labels: int = 10) -> pd.DataFrame:
-    centroids = rng.normal(0.0, 1.0, (labels, dim))
-    label = rng.integers(0, labels, n)
-    vec = centroids[label] + rng.normal(0.0, 1.5, (n, dim))
-    vec /= np.linalg.norm(vec, axis=1, keepdims=True)
-    return pd.DataFrame({
-        "vec_id": np.arange(n, dtype=np.int64),
-        "embedding": list(vec.astype(np.float32)),
-        "label": label.astype(np.int32),
-    })
-
-
-def write_tables(out_dir: str, tables: dict[str, pd.DataFrame]) -> dict[str, dict]:
-    """Write each table as ``<out_dir>/<name>.parquet``; return rows/bytes."""
+def write_tables(seed: int, out_dir: str, names: list[str]) -> dict[str, dict]:
+    """Write each named table's resample as ``<out_dir>/<name>.parquet``
+    (snappy, like the source test tables); return rows and bytes."""
     os.makedirs(out_dir, exist_ok=True)
     sizes = {}
-    for name, df in tables.items():
+    for name in names:
         path = os.path.join(out_dir, f"{name}.parquet")
-        table = pa.Table.from_pandas(df, preserve_index=False)
-        if name == "embeddings":
-            table = table.set_column(
-                1, "embedding",
-                pa.array(list(df["embedding"]), type=pa.list_(pa.float32())),
-            )
+        table = resample(seed, name)
         pq.write_table(table, path)
-        sizes[name] = {"rows": len(df), "bytes": os.path.getsize(path)}
+        sizes[name] = {"rows": table.num_rows, "bytes": os.path.getsize(path)}
     return sizes
 
 
@@ -381,17 +277,16 @@ def write_workbooks(seed: int, out_dir: str) -> dict[str, dict]:
 
 
 def main(argv=None) -> int:
-    """``gen.py SEED SF DATA_DIR BOOKS_DIR TABLE,... WITH_BOOKS OUT_JSON``:
+    """``gen.py SEED DATA_DIR BOOKS_DIR TABLE,... WITH_BOOKS OUT_JSON``:
     write the inputs of one run and their sizes. Run as a child process
     so the generator's memory is not billed to the benchmarked Python
     driver process."""
     import json
     import sys
 
-    seed, sf, data_dir, books_dir, names, with_books, out = (argv or sys.argv[1:])
-    tables = star_tables(int(seed), float(sf))
+    seed, data_dir, books_dir, names, with_books, out = (argv or sys.argv[1:])
     sizes = {
-        "tables": write_tables(data_dir, {t: tables[t] for t in names.split(",")}),
+        "tables": write_tables(int(seed), data_dir, names.split(",")),
         "workbooks": write_workbooks(int(seed), books_dir) if with_books == "1" else {},
     }
     with open(out, "w") as fh:

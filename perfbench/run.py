@@ -10,10 +10,12 @@ runs at ``local[nproc]`` with the engine's default session posture
 (``get_spark``) and ``SPARK_GRAFT_CPUS=nproc``.
 
 A run: generate inputs -> set up (engine import, session, one warm-up
-scan) -> one cold pass over the operation list -> warm passes until
-``--seconds`` have passed -> output check (untimed) -> report. The last
-stdout line is the JSON result; ``--trace 0`` reports the end-to-end
-metrics, ``--trace 1`` the per-layer metrics of a traced run. See
+scan) -> one cold pass over the operation list -> one settling pass (not
+measured) -> warm passes until ``--seconds`` have passed -> output check
+(untimed) -> report. The last stdout line is the JSON result;
+``--trace 0`` reports the end-to-end metrics, ``--trace 1`` the
+per-layer metrics of a traced run, which first makes the untraced run at
+the same seed in a child process to measure the tracing overhead. See
 perfbench/README.md.
 """
 
@@ -31,7 +33,7 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
-SCALE = "0.1"  # sf token: some registry queries read the scale from the path
+SCALE = "0.1"  # the source tables' scale; some registry queries read it from the path
 SNAPSHOT = "March 2023"
 
 sys.path.insert(0, HERE)
@@ -272,7 +274,7 @@ class Bench:
                     problems = check_publish(oracle, self.spark, h, self.args.seed,
                                              TARGETS, SNAPSHOT)
                 elif name == "views":
-                    problems = check_views(self.spark, h)
+                    problems = check_views(oracle, self.spark, self.warehouse, h)
                 else:
                     problems = oracle.check_query(name, h)
             except Exception as exc:
@@ -323,13 +325,29 @@ def generate(args, run_dir: str):
     out = os.path.join(run_dir, "inputs.json")
     with_books = "1" if ETL_OPS & set(WORKLOADS[args.workload]) else "0"
     subprocess.run(
-        [sys.executable, os.path.join(HERE, "gen.py"), str(args.seed), SCALE, data_dir,
+        [sys.executable, os.path.join(HERE, "gen.py"), str(args.seed), data_dir,
          books_dir, ",".join(TABLES[args.workload]), with_books, out],
         check=True,
     )
     with open(out) as fh:
         sizes = json.load(fh)
     return data_dir, books_dir, sizes["tables"], sizes["workbooks"]
+
+
+def untraced_walls(args) -> list[float]:
+    """Warm-pass wall times of the untraced run at the same seed, made by
+    a child process before this traced run starts, so the tracing
+    overhead (traced pass minus untraced pass) includes the event log."""
+    import subprocess
+
+    subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--workload", args.workload,
+         "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", "0"],
+        check=True, stdout=sys.stderr,
+    )
+    name = f"{args.workload}-seed{args.seed}-trace0.json"
+    with open(os.path.join(WORK, "results", name)) as fh:
+        return json.load(fh)["warm_walls"]
 
 
 def main(argv=None) -> int:
@@ -346,6 +364,8 @@ def main(argv=None) -> int:
     shutil.rmtree(run_dir, ignore_errors=True)
     prepare_env(run_dir)
 
+    plain_walls = untraced_walls(args) if args.trace else []
+
     t = time.perf_counter()
     data_dir, books_dir, sizes, books = generate(args, run_dir)
     gen_s = time.perf_counter() - t
@@ -360,30 +380,24 @@ def main(argv=None) -> int:
         instrument(bench.tracer)
 
     cold_s, cold_lat, _ = bench.run_pass(ops, None)
+    # one settling pass, not measured: the first pass after the cold one
+    # is still 8-15% slower than later ones (JIT), so measuring it would
+    # make the warm figures depend on how many passes fit in --seconds
+    bench.run_pass(ops, None)
 
     # warm passes until --seconds have passed (at least one); a traced run
-    # makes exactly three, plain / traced / plain, so the tracing overhead
-    # is the traced pass minus its plain neighbours
+    # makes exactly one, with spans on
     warm_lat: list[tuple[str, float | None]] = []
-    walls: dict[str, list[float]] = {"plain": [], "traced": []}
+    walls: list[float] = []
     handles: dict = {}
     t0 = time.perf_counter()
-    k = 0
-
-    def more() -> bool:
-        if args.trace:
-            return k < 3
-        return k == 0 or time.perf_counter() - t0 < args.seconds
-
-    while more():
-        traced = bool(args.trace) and k == 1
-        bench.tracer.enabled = traced
-        wall, lat, handles = bench.run_pass(ops, f"p{k}" if traced else None)
-        walls["traced" if traced else "plain"].append(wall)
-        if not traced:
-            warm_lat += lat
-        k += 1
-    warm_s = sum(walls["plain"])
+    bench.tracer.enabled = bool(args.trace)
+    while not walls or (not args.trace and time.perf_counter() - t0 < args.seconds):
+        tag = f"p{len(walls)}" if args.trace else None
+        wall, lat, handles = bench.run_pass(ops, tag)
+        walls.append(wall)
+        warm_lat += lat
+    warm_s = sum(walls)
     rss, rss_parts = peak_rss_mb()
     ticks1 = cpu_ticks()
     steal = (ticks1[0] - ticks0[0]) / max(1, ticks1[1] - ticks0[1])
@@ -396,7 +410,7 @@ def main(argv=None) -> int:
     shutdown(spark)
     stop_s = time.perf_counter() - t
 
-    attempted = len(ops) * (1 + k)
+    attempted = len(ops) * (2 + len(walls))
     failed = len(bench.errors) + len(bad)
     samples = [d for _, d in warm_lat if d is not None]
     correct_ops = sum(1 for n, d in warm_lat if d is not None and n not in bad)
@@ -408,7 +422,7 @@ def main(argv=None) -> int:
         "gen_s": gen_s, "check_s": check_s, "check_times": bench.check_times,
         "stop_s": stop_s, "peak_rss_mb": rss, "rss_parts_mb": rss_parts,
         "cpu_steal_share": steal,
-        "warm_passes": len(walls["plain"]), "warm_samples": len(samples),
+        "warm_walls": walls, "warm_samples": len(samples),
         "op_tail_s": tail_s, "op_tail_percentile": tail_p,
         "errors": bench.errors, "mismatches": bad,
         "failed_share": failed / attempted,
@@ -418,7 +432,7 @@ def main(argv=None) -> int:
     if args.trace:
         from layers import per_layer_metrics
 
-        metrics = per_layer_metrics(bench, walls, books)
+        metrics = per_layer_metrics(bench, walls, plain_walls, books)
         bench.tracer.write(os.path.join(run_dir, "spans.jsonl"))
     else:
         metrics = {
@@ -439,7 +453,7 @@ def main(argv=None) -> int:
     print(f"machine: {json.dumps(key)}")
     print(f"inputs: {json.dumps(sizes)}")
     print(f"workload {args.workload}: {len(ops)} operations, 1 closed-loop client, "
-          f"{len(walls['plain'])} plain warm passes, {len(samples)} warm samples, "
+          f"{len(walls)} warm passes, {len(samples)} warm samples, "
           f"gen_s={gen_s:.2f} check_s={check_s:.2f} stop_s={stop_s:.2f}; "
           f"CPU steal {steal:.1%} of machine time from set-up to the last warm pass")
     print(f"op_tail_s: p{tail_p} of {len(samples)} samples = {tail_s:.6g} s" if tail_p
